@@ -7,15 +7,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (reference DDL: `Codes/database_init/create_table.sql:6-39` — TSV,
   * `\t`-delimited, no header).
   *
-  * All reads are parquet scans with the schema served from
+  * The synthetic tables are parquet scans with the schema served from
   * [[graft.sources.SchemaCache]] (inferred from footers once per JVM,
   * the metastore analogue — a bare `spark.read.parquet` re-runs the
   * footer-inference job on every DataFrame construction) so Catalyst
-  * owns predicate pushdown / column pruning / partition sizing;
-  * nothing else is cached or collected here. At cluster scale the same
+  * owns predicate pushdown / column pruning / partition sizing; no
+  * parquet row is cached or collected here. At cluster scale the same
   * paths resolve to HDFS/S3 directories — partition parallelism comes
   * from `spark.sql.files.maxPartitionBytes`, not from anything we
   * hand-roll.
+  *
+  * The TSV tables are the exception: [[tsv]] serves an in-memory
+  * snapshot per session, keyed by the table's file listing and
+  * extended when files are appended ([[graft.sources.TsvSnapshots]]).
   */
 object Tables {
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
@@ -62,10 +66,12 @@ object Tables {
 
   /** Reference-parity TSV ingest (S1): exact semantics of the Hive DDL
     * `ROW FORMAT DELIMITED FIELDS TERMINATED BY '\t'`
-    * (`create_table.sql:13,25,38`) — no header, explicit schema.
+    * (`create_table.sql:13,25,38`) — no header, explicit schema —
+    * served from the table's snapshot: the path is listed on every
+    * call, an unchanged listing is served without opening a file, and
+    * only appended files are parsed ([[graft.sources.TsvSnapshots]]).
     */
   def tsv(spark: SparkSession, path: String,
           schema: org.apache.spark.sql.types.StructType): DataFrame =
-    spark.read.option("sep", "\t").option("header", "false")
-      .schema(schema).csv(path)
+    graft.sources.TsvSnapshots.read(spark, path, schema)
 }

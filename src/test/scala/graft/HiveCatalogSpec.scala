@@ -5,10 +5,12 @@ package graft
   * (paths adapted) against Spark's Hive catalog — CREATE DATABASE /
   * USE / CREATE TABLE ... ROW FORMAT DELIMITED FIELDS TERMINATED BY
   * '\t' / LOAD DATA LOCAL INPATH ... OVERWRITE INTO TABLE — then the
-  * reference queries over the catalog tables via spark.sql.
+  * reference queries over the catalog tables via spark.sql, over the
+  * movie shop fixture (`src/test/resources/movieshop`; expected values
+  * from `tools/movieshop_expected.py`).
   */
 class HiveCatalogSpec extends SparkTestBase {
-  val seed = "/root/reference/Codes/database_init"
+  val seed: String = MovieShopSpec.fixture
 
   test("reference DDL + LOAD DATA runs verbatim; SQL queries hit the Hive tables") {
     spark.sql("CREATE DATABASE IF NOT EXISTS movie_shop")
@@ -33,8 +35,8 @@ class HiveCatalogSpec extends SparkTestBase {
                 |ROW FORMAT DELIMITED FIELDS TERMINATED BY '\t'""".stripMargin)
     spark.sql(s"LOAD DATA LOCAL INPATH '$seed/order.csv' OVERWRITE INTO TABLE order_info")
     try {
-      assert(spark.sql("SELECT count(*) FROM movie").collect()(0).getLong(0) == 200)
-      assert(spark.sql("SELECT count(*) FROM order_info").collect()(0).getLong(0) == 50)
+      assert(spark.sql("SELECT count(*) FROM movie").collect()(0).getLong(0) == 24)
+      assert(spark.sql("SELECT count(*) FROM order_info").collect()(0).getLong(0) == 20)
       // the movie-list query (DatabaseAccessor.py:98-103) as SQL
       val page = spark.sql(
         """SELECT movie_id FROM movie WHERE name LIKE '%Kiss%'
@@ -42,7 +44,7 @@ class HiveCatalogSpec extends SparkTestBase {
       assert(page.length == 1)
       // the insert path (A1 MAX+1) as SQL
       assert(spark.sql("SELECT max(order_id) FROM order_info")
-        .collect()(0).getInt(0) == 50)
+        .collect()(0).getInt(0) == 20)
       // catalog listing (G4 `ls` analogue)
       assert(spark.catalog.listTables("movie_shop").collect()
         .map(_.name).toSet.contains("movie"))
